@@ -63,9 +63,11 @@ object ScaleBench {
     spark.stop()
   }
 
+  /** The core count the session runs at: SPARK_GRAFT_CPUS, default 32. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
   def session(): SparkSession = {
-    val spark = graft.Sessions.localBuilder(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.Sessions.localBuilder(cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.optimizer.excludedRules",

@@ -184,6 +184,8 @@ object ScaleGate {
           bounds.perQuery.keys.toSeq.sorted, reps))
       } finally spark.stop()
     println(f"[scalegate] box canary $canary%.3f s (quiet)")
+    // no "exp=" on this line, so the artifact's row parser skips it
+    println(s"[scalegate] ran at SPARK_GRAFT_CPUS=${ScaleBench.cpus}")
     val bad = violations(rows, bounds, factor)
     val badNames = bad.map(_._1.name).toSet
     rows.foreach { r =>
