@@ -78,7 +78,7 @@ object Bench {
       // would corrupt the whole line the driver parses
       val safe = why.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
       // Locale.ROOT: a comma-decimal default locale would emit "220,72"
-      // and corrupt the JSON numbers (the fmt2 rationale in main)
+      // and corrupt the JSON numbers (see fmt2)
       def n(v: Double, digits: Int) = String.format(java.util.Locale.ROOT,
         s"%.${digits}f", Double.box(v))
       val committed = committedJson.flatMap(committedSummary).map {
@@ -241,6 +241,44 @@ object Bench {
       val entries = shown.flatMap(k => m.get(k).map(v => "\"" + k + "\":" + n(v)))
       if (entries.isEmpty) "" else s""","cqueries":{${entries.mkString(",")}}"""
     }.getOrElse("")
+
+  private def fmt2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+
+  /** The stdout line: `head`, the shown count, `mid`, the slowest-first
+    * `queries`/`qmin` maps, `tail` and [[cqueriesField]]. Queries are shown
+    * while the whole line stays within `limit` chars, so line + sbt suffix
+    * fit the driver's 2000-char tail with margin. On a refused line a shown
+    * query costs three entries (med, min, committed med) and the first
+    * committed one also brings the `cqueries` wrapper; the running lengths
+    * count all of them. Locale.ROOT 2-decimal figures: a comma-decimal
+    * default locale would break the JSON. Pure — spec-tested in
+    * Round19OpsSpec.
+    */
+  def statusLine(head: String, mid: String, results: Seq[(String, (Double, Double))],
+      cMeds: Option[Map[String, Double]], tail: String, limit: Int = 1700): String = {
+    def line(shown: Int, qs: String, mins: String, cq: String) =
+      s"""{"metric":"total",$head,"shown":$shown,$mid,"queries":{$qs},"qmin":{$mins},$tail$cq}"""
+    val sb = new StringBuilder
+    val sbMin = new StringBuilder
+    val shownKeys = scala.collection.mutable.ArrayBuffer.empty[String]
+    var len = line(results.size, "", "", "").length // "shown" at its widest
+    var cqCount = 0
+    results.sortBy(-_._2._1).foreach { case (k, (med, mn)) =>
+      val sep = if (shownKeys.isEmpty) "" else ","
+      val entry = sep + "\"" + k + "\":" + fmt2(med)
+      val entryMin = sep + "\"" + k + "\":" + fmt2(mn)
+      val cq = cMeds.flatMap(_.get(k)).map { v =>
+        (if (cqCount == 0) ""","cqueries":{}""" else ",") + "\"" + k + "\":" + fmt2(v)
+      }
+      val add = entry.length + entryMin.length + cq.map(_.length).getOrElse(0)
+      if (len + add <= limit) {
+        sb.append(entry); sbMin.append(entryMin); shownKeys += k
+        len += add
+        if (cq.nonEmpty) cqCount += 1
+      }
+    }
+    line(shownKeys.size, sb.result(), sbMin.result(), cqueriesField(shownKeys.toSeq, cMeds))
+  }
 
   /** Which way out of a refusal streak: after K consecutive refusals the
     * operator must know whether the BOUND drifted (recalibrate) or the box
@@ -548,38 +586,17 @@ object Bench {
     // driftVerdict note above).
     val (headVal, liveSwapped) = headline(refusal, total,
       if (only.isEmpty) sameCore.flatMap(committedSummary).map(_._1) else None)
-    // Stdout line: slowest-first, 2-decimal, capped so line + sbt suffix fit
-    // the driver's 2000-char tail with margin.
-    // Locale.ROOT: under a comma-decimal default locale f"%.2f" would emit
-    // "1,23" and break the JSON line.
-    def fmt2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val liveField = liveSwapped.map(v => s""","live_total":${fmt2(v)}""").getOrElse("")
     // On a refused full-board run the shown queries ALSO carry the
     // committed quiet medians (see cqueriesField) — committed-to-committed
     // per-query comparison, same rationale as the headline swap.
     val cMeds = if (refusal.nonEmpty && only.isEmpty)
       sameCore.flatMap(committedBoard).map(_._1) else None
-    val budget = 1700 - adjudication.length - liveField.length - calib.length
-    // each shown query carries BOTH figures — "qmin" is the load-robust one
-    // the judge adjudicates regressions from (see the median/min note above)
-    val sb = new StringBuilder
-    val sbMin = new StringBuilder
-    val shownKeys = scala.collection.mutable.ArrayBuffer.empty[String]
-    var n = 0
-    results.sortBy(-_._2._1).foreach { case (k, (med, mn)) =>
-      val sep = if (n == 0) "" else ","
-      val entry = sep + "\"" + k + "\":" + fmt2(med)
-      val entryMin = sep + "\"" + k + "\":" + fmt2(mn)
-      // a shown query costs THREE entries on a refused line (med + min +
-      // committed med), two otherwise — budget for all of them
-      val cLen = cMeds.flatMap(_.get(k))
-        .map(v => sep.length + k.length + 3 + fmt2(v).length).getOrElse(0)
-      if (sb.length + sbMin.length + entry.length + entryMin.length + cLen <= budget) {
-        sb.append(entry); sbMin.append(entryMin); shownKeys += k; n += 1
-      }
-    }
-    val cq = cqueriesField(shownKeys.toSeq, cMeds)
-    println(s"""{"metric":"total","value":${fmt2(headVal)},"unit":"sec","n":${results.size + failed.size},"shown":$n,"failed":${failed.size},"canary":[${fmt2(canaryStart)},${fmt2(canaryEnd)}],"queries":{${sb.result()}},"qmin":{${sbMin.result()}},"full":"$boardFile","sf":"$sfDir"$adjudication$liveField$calib$cq}""")
+    println(statusLine(
+      s""""value":${fmt2(headVal)},"unit":"sec","n":${results.size + failed.size}""",
+      s""""failed":${failed.size},"canary":[${fmt2(canaryStart)},${fmt2(canaryEnd)}]""",
+      results, cMeds,
+      s""""full":"$boardFile","sf":"$sfDir"$adjudication$liveField$calib"""))
     spark.stop()
   }
 }

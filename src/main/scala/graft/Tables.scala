@@ -37,10 +37,14 @@ object Tables {
     // one entry PER PATH, replaced on rewrite — not appended (the r18
     // keyed-by-(path,stamp) map accumulated dead entries across the
     // ScaleBench replica rewrites in long-lived sessions)
-    val cached = schemaCache.compute(path, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read.parquet(path).schema))
-    spark.read.schema(cached._2).parquet(path)
+    // infer outside the map's bin lock (a parquet footer read can take
+    // seconds on a remote store); a racing miss just infers twice
+    val schema = Option(schemaCache.get(path)).filter(_._1 == stamp).map(_._2).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemaCache.put(path, (stamp, inferred))
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Normalize `events.ts` to a micros TimestampType whatever the parquet

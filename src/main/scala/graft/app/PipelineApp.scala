@@ -328,8 +328,9 @@ object PipelineApp {
       .indexed(spark, s"$warehouseDir/_vec_index")
     println(s"[demo] vector index: indexed=${idx.count()} " +
       s"cells=${idx.select("cid").distinct().count()}")
+    val counts = journal.statusCounts
     println(s"[demo] statuses: " + FileStatus.all.map(s =>
-      s"${s.name}=${journal.byStatus(s).count()}").mkString(" "))
+      s"${s.name}=${counts.getOrElse(s, 0L)}").mkString(" "))
   }
 
   /** Continuous mode — config-driven cadences (B5), defaults = reference's. */
@@ -447,10 +448,10 @@ object PipelineApp {
     every("cleanup", cfg.cleanup.workCycleSec) {
       Retry(cfg.cleanup.retry, "cleanup") {
         Lifecycle.cleanup(journal, root, LocalDate.now())
-        // delta-log-style checkpoint on the GC cadence (3 h default): the
-        // event log otherwise grows without bound and every latest-wins
-        // view scans the full history; journal mutators are synchronized,
-        // so the compaction swap cannot lose a concurrent append
+        // journal snapshot on the GC cadence (3 h default): the batch log
+        // otherwise grows without bound and a restart replays all of it;
+        // journal mutators are synchronized, so a concurrent append lands
+        // in the new generation, never between snapshot and delete
         journal.compact(now())
         // warehouse small-files pass: partitions accumulate one file set
         // per ingest cycle; rewrite any that fragmented past 8 files

@@ -50,14 +50,12 @@ object TickerIngest {
     df.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
 
   /** Quarantined rows (kept, not silently dropped — the reference logs them;
-    * we preserve them for reprocessing).
+    * we preserve them for reprocessing), with every column. Keeping the
+    * data columns is what makes the quarantine exact: the CSV parser
+    * type-checks only the columns a plan requires, so a plan that needs
+    * only `_corrupt_record` would see arity errors and miss type errors.
     */
-  def corruptRows(df: DataFrame): DataFrame =
-    // the tautological ticker reference defeats QUERY_ONLY_CORRUPT_RECORD_COLUMN
-    // (the analysis check fires when _corrupt_record is the only data column)
-    df.filter(col("_corrupt_record").isNotNull &&
-        (col("ticker").isNull || col("ticker").isNotNull))
-      .select("filename", "file_date", "_corrupt_record")
+  def corruptRows(df: DataFrame): DataFrame = df.filter(col("_corrupt_record").isNotNull)
 
   /** A fully-written but uncommitted ingest: every fallible step (read,
     * validate, both writes, the outcome aggregate) has already happened into
@@ -72,49 +70,36 @@ object TickerIngest {
 
   /** The fallible phase of the load — safe to retry. Writes valid rows
     * (partitioned by file_date) and quarantine rows into fresh staging
-    * dirs and computes the per-file outcome aggregate (B14: the staged
-    * write is the barrier, the filename group-by the attribution).
+    * dirs and computes the per-file outcome (B14: the staged write is the
+    * barrier, the filename group-by the attribution). Valid rows per file
+    * are counted from the staged warehouse output, which the parser
+    * type-checked in full; every other row of the file is corrupt. Counting
+    * from a second parse would be wrong: the CSV parser type-checks only
+    * the columns a plan requires, so a count plan misses type errors.
     */
   def stage(spark: SparkSession, paths: Seq[String], warehouseDir: String,
       quarantineDir: Option[String] = None): StagedIngest = {
-    import spark.implicits._
     if (paths.isEmpty)
       return StagedIngest(IngestReport(Nil, 0L, 0L), "", warehouseDir, None, quarantineDir)
-    // No cache: at 100 TB the input never fits in storage memory, and a
-    // second CSV parse for the metadata-sized outcome aggregate is cheaper
-    // than materializing the full dataset (measured locally too).
     val df = read(spark, paths)
     val token = java.util.UUID.randomUUID().toString
     val stagingWh = s"$warehouseDir/_staging/$token"
     val stagingQr = quarantineDir.map(q => s"$q/_staging/$token")
-    // PERMISSIVE corrupt detection only sees type errors in columns the scan
-    // actually parses; under column pruning the quarantine write and outcome
-    // agg would parse 1-2 columns and under-detect corruption. Disable CSV
-    // parser pruning for the whole ingest (the main write reads every column
-    // anyway, so it loses nothing).
-    val pruneKey = "spark.sql.csv.parser.columnPruning.enabled"
-    val oldPrune = spark.conf.get(pruneKey, "true")
-    spark.conf.set(pruneKey, "false")
-    try {
-      zorderCluster(spark, validRows(df))
-        .write.mode(SaveMode.Append)
-        .partitionBy("file_date")
-        .parquet(stagingWh)
-      stagingQr.foreach(q =>
-        corruptRows(df).write.mode(SaveMode.Append).parquet(q))
-      // the tautological `ticker` reference satisfies the
-      // QUERY_ONLY_CORRUPT_RECORD_COLUMN analysis check (it fires whenever
-      // _corrupt_record is the only data column referenced)
-      val outcomes = df.filter(col("ticker").isNotNull || col("ticker").isNull)
-        .groupBy("filename")
-        .agg(
-          sum(when(col("_corrupt_record").isNull, 1L).otherwise(0L)).as("rows"),
-          sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)).as("corrupt_rows"))
-        .as[FileOutcome].collect().toSeq
-      StagedIngest(
-        IngestReport(outcomes, outcomes.map(_.rows).sum, outcomes.map(_.corrupt_rows).sum),
-        stagingWh, warehouseDir, stagingQr, quarantineDir)
-    } finally spark.conf.set(pruneKey, oldPrune)
+    zorderCluster(spark, validRows(df))
+      .write.mode(SaveMode.Append)
+      .partitionBy("file_date")
+      .parquet(stagingWh)
+    stagingQr.foreach(q => corruptRows(df).write.mode(SaveMode.Append).parquet(q))
+    // one job: every parsed row counts toward n, every staged row toward ok
+    val parsed = df.select(col("filename"), lit(1L).as("n"), lit(0L).as("ok"))
+    val kept = spark.read.schema("filename STRING").parquet(stagingWh)
+      .select(col("filename"), lit(0L).as("n"), lit(1L).as("ok"))
+    val outcomes = parsed.union(kept).groupBy("filename").agg(sum("n"), sum("ok")).collect()
+      .map(r => FileOutcome(r.getString(0), r.getLong(2), r.getLong(1) - r.getLong(2)))
+      .sortBy(_.filename).toSeq
+    StagedIngest(
+      IngestReport(outcomes, outcomes.map(_.rows).sum, outcomes.map(_.corrupt_rows).sum),
+      stagingWh, warehouseDir, stagingQr, quarantineDir)
   }
 
   /** Optional z-order clustering of the staged warehouse write (off by

@@ -1,264 +1,256 @@
 package graft.journal
 
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.sql.{Date, Timestamp}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import java.time.LocalDate
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField}
 import graft.schema.{FileStatus, Schemas}
 
 /** The metadata journal — our native replacement for the reference's
   * ClickHouse `ticker_files` table and its 11 DAO query shapes
   * (`/root/reference/MainService/src/main/java/com/crypto/service/dao/ClickHouseDAO.java:31-202`).
+  * The reference mutates rows in place (`ClickHouseDAO.java:169-182`); here
+  * every status change is an event `(filename, create_date, status,
+  * updated_at, batch_seq)` and a file's status is its latest event by
+  * `(updated_at, batch_seq)` (SURVEY §2.1 op 9).
   *
-  * The reference mutates rows in place (`ALTER TABLE ... UPDATE`,
-  * `ClickHouseDAO.java:169-182`). A file-backed Spark table has no mutation,
-  * so the journal is **append-only events + a latest-wins view**
-  * (SURVEY §2.1 op 9): every status change appends
-  * `(filename, create_date, status, updated_at, batch_seq)` and [[current]]
-  * resolves per-filename latest by `(updated_at, batch_seq)`.
+  * The journal is metadata — one row per *file* — so it lives on the driver,
+  * kept the way Structured Streaming keeps its offset and commit logs: a map
+  * from filename to latest event, backed by an append-only log under `dir`.
+  * Each mutator writes one batch file `<gen>-<seq>.batch` under a temp name
+  * and renames it into place before it returns; [[compact]] publishes
+  * `<gen+1>.snapshot` by the same rename and only then deletes older files.
+  * A new instance replays the newest snapshot and its generation's batches
+  * and ignores everything else (temp files, a superseded generation), so no
+  * crash point loses a published event. The journal starts no Spark job of
+  * its own: its DataFrame views are local relations.
   *
-  * Concurrency contract (SURVEY §7.4 hard part 1): single writer — exactly
-  * like the reference, where one scheduler thread per flow step owns the
-  * journal write. Idempotence: re-appending an identical transition batch
-  * changes nothing observable (latest-wins picks the same status).
-  *
-  * 100 TB design: the journal is metadata (one row per *file*, not per data
-  * row) — millions of rows at worst. The latest-wins window shuffles once on
-  * filename; [[compact]] bounds event-log growth exactly like delta-log
-  * checkpointing, so the view never scans unbounded history.
+  * Concurrency contract (SURVEY §7.4 hard part 1): single writer, like the
+  * reference's one scheduler thread per flow step. Mutators are synchronized
+  * on the instance (PipelineApp's flows and discovery stream share one
+  * journal across threads); readers see the map each mutator publishes whole.
   */
 class TickerFileJournal(val spark: SparkSession, val dir: String) {
-  import spark.implicits._
+  import TickerFileJournal._
 
-  /** The journal directory's FileSystem + qualified path. Every filesystem
-    * touch below goes through this (not `java.io.File`), so the journal
-    * can live on HDFS/object storage like the warehouse it tracks.
-    */
-  private def fsPath(p: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) =
-    graft.ingest.HadoopFs.forPath(spark, p)
+  private val (fs, root) = graft.ingest.HadoopFs.forPath(spark, dir)
 
-  private def dirHasData: Boolean = {
-    val (fs, d) = fsPath(dir)
-    fs.exists(d) && fs.listStatus(d).exists { s =>
-      val n = s.getPath.getName
-      n.endsWith(".parquet") || n.startsWith("part-")
+  private var gen = 0L // snapshot generation the log extends
+  private var seq = 0L // its last batch_seq
+  @volatile private var files = Map.empty[String, Event]
+
+  locally {
+    val (g, seqs) = liveLog()
+    gen = g
+    seq = seqs.lastOption.getOrElse(0L)
+    files = latestWins(files, replay(g, seqs).iterator)
+  }
+
+  /** The newest snapshot generation on disk and its batch seqs, ascending. */
+  private def liveLog(): (Long, Seq[Long]) = {
+    val names = if (fs.exists(root)) fs.listStatus(root).map(_.getPath.getName).toSeq else Nil
+    // reopening such a dir as empty would re-journal, and reload, every file on disk
+    require(!names.exists(_.startsWith("part-")),
+      s"$dir holds a parquet event log from an earlier journal format, which this one does not read")
+    val g = names.collect { case SnapshotFile(g) => g.toLong }.maxOption.getOrElse(0L)
+    (g, names.collect { case BatchFile(bg, s) if bg.toLong == g => s.toLong }.sorted)
+  }
+
+  private def replay(g: Long, seqs: Seq[Long]): Seq[Event] =
+    (if (g > 0) read(s"$g.snapshot", 0L) else Nil) ++ seqs.flatMap(s => read(s"$g-$s.batch", s))
+
+  private def read(name: String, batchSeq: Long): Seq[Event] = {
+    val in = new DataInputStream(new BufferedInputStream(fs.open(new Path(root, name))))
+    try {
+      require(in.readUTF() == Format, s"journal file $name: unknown format")
+      Seq.fill(in.readInt()) {
+        Event(in.readUTF(), Date.valueOf(LocalDate.ofEpochDay(in.readLong())),
+          FileStatus.fromName(in.readUTF()), timestamp(in.readLong(), in.readInt()), batchSeq)
+      }
+    } finally in.close()
+  }
+
+  /** Writes `events` to `name` under a temp name, then renames it into place. */
+  private def publish(name: String, events: Iterable[Event]): Unit = {
+    val (tmp, dst) = (new Path(root, name + ".tmp"), new Path(root, name))
+    val out = new DataOutputStream(new BufferedOutputStream(fs.create(tmp, true)))
+    try {
+      out.writeUTF(Format)
+      out.writeInt(events.size)
+      events.foreach { e =>
+        out.writeUTF(e.filename); out.writeLong(e.createDate.toLocalDate.toEpochDay)
+        out.writeUTF(e.status.name); out.writeLong(e.updatedAt.getTime); out.writeInt(e.updatedAt.getNanos)
+      }
+    } finally out.close()
+    if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"journal publish failed: $tmp -> $dst")
+  }
+
+  /** Appends `hit` moved to `to` as the next batch. Caller holds the lock. */
+  private def append(hit: Seq[Event], to: FileStatus, now: Timestamp): Long = {
+    if (hit.nonEmpty) {
+      val batch = hit.map(_.copy(status = to, updatedAt = now, batchSeq = seq + 1))
+      publish(s"$gen-${seq + 1}.batch", batch)
+      seq += 1
+      files = latestWins(files, batch.iterator)
     }
+    hit.size.toLong
   }
 
-  private val eventSchema = Schemas.tickerFile
-    .add(org.apache.spark.sql.types.StructField("batch_seq", org.apache.spark.sql.types.LongType))
+  private def movable(e: Event, to: FileStatus): Boolean =
+    e.status != to && FileStatus.canTransition(e.status, to)
 
-  /** All journal events (empty-safe). */
-  def events: DataFrame =
-    if (dirHasData) spark.read.schema(eventSchema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], eventSchema)
+  /** One row per file with its current status. */
+  def current: DataFrame = frame(files.values)
 
-  /** Cached max batch_seq — valid under the single-writer contract. Without
-    * the cache every transition scans the full event log for max(batch_seq):
-    * O(events) per append between compactions.
-    */
-  private var cachedMaxSeq: Option[Long] = None
+  private def frame(events: Iterable[Event]): DataFrame =
+    spark.createDataFrame(events.map(e =>
+      Row(e.filename, e.createDate, e.status.name, e.updatedAt)).toSeq.asJava, Schemas.tickerFile)
 
-  private def nextBatchSeq(): Long = cachedMaxSeq match {
-    case Some(s) => s + 1L
-    case None =>
-      val s = maxBatchSeq
-      cachedMaxSeq = Some(s)
-      s + 1L
+  /** The logged events since the last compaction (the snapshot is batch 0). */
+  def events: DataFrame = this.synchronized {
+    spark.createDataFrame(replay(gen, liveLog()._2).map(e =>
+      Row(e.filename, e.createDate, e.status.name, e.updatedAt, e.batchSeq)).asJava,
+      Schemas.tickerFile.add(StructField("batch_seq", LongType)))
   }
 
-  private def noteAppended(seq: Long): Unit = cachedMaxSeq = Some(seq)
-
-  private def append(df: DataFrame): Unit =
-    df.select("filename", "create_date", "status", "updated_at", "batch_seq")
-      .coalesce(1) // journal batches are tiny metadata; one file per batch
-      .write.mode(SaveMode.Append).parquet(dir)
-
-  /** Latest-wins view — one row per filename with its current status.
-    * Formulated as max_by over (updated_at, batch_seq) rather than a
-    * row_number window: an aggregate gets map-side partial combine, so the
-    * shuffle carries one row per file per map task instead of the full
-    * event history — the difference between O(events) and O(files) shuffle
-    * bytes as history accumulates between [[compact]]s.
+  /** Snapshot-isolation read: the latest-wins view AS OF batch `seq`,
+    * immune to later appends. [[compact]] folds history into batch 0, so
+    * snapshots reach back only to the last compaction.
     */
-  def current: DataFrame = latestWins(events)
+  def asOf(seq: Long): DataFrame = this.synchronized {
+    frame(latestWins(Map.empty, replay(gen, liveLog()._2.filter(_ <= seq)).iterator).values)
+  }
 
-  private def latestWins(ev: DataFrame): DataFrame =
-    ev.groupBy("filename")
-      .agg(max_by(
-        struct(col("create_date"), col("status"), col("updated_at")),
-        struct(col("updated_at"), col("batch_seq"))).as("_latest"))
-      .select(col("filename"), col("_latest.create_date"),
-        col("_latest.status"), col("_latest.updated_at"))
-
-  /** Snapshot-isolation read: the latest-wins view AS OF batch `seq` —
-    * replays only events with `batch_seq <= seq`, so a reader pins the
-    * exact journal state that existed after that batch committed, immune
-    * to concurrent appends (the delta-log time-travel shape). History
-    * horizon: [[compact]] folds all events into batch 0, so snapshots
-    * reach back only to the last compaction — `asOf(anything)` after a
-    * compact returns the compacted state, never a partial one.
-    */
-  def asOf(seq: Long): DataFrame =
-    latestWins(events.filter(col("batch_seq") <= seq))
-
-  /** Highest batch_seq present in the log (0 when empty/just compacted) —
-    * the snapshot handle a reader pairs with [[asOf]].
-    */
-  def maxBatchSeq: Long =
-    if (dirHasData) events.agg(coalesce(max("batch_seq"), lit(0L))).as[Long].head()
-    else 0L
+  /** Highest batch_seq in the log (0 when empty or just compacted). */
+  def maxBatchSeq: Long = this.synchronized(seq)
 
   /** B6 — journal the unseen subset of `candidates(filename, create_date)`
-    * as DISCOVERED (anti-join dedup,
-    * `SaveNewFilesToDbFlow.java:216-248`). Returns inserted count.
-    *
-    * Mutators (`appendDiscovered` / `transitionWhere` / `claimReady` /
-    * [[compact]] / [[truncate]]) are synchronized on the journal instance:
-    * in [[graft.app.PipelineApp]] the three lifecycle flows and the
-    * discovery stream each run on their own thread against one journal, so
-    * an unsynchronized interleave could collide batch_seq values or — worse
-    * — land an append between compact's snapshot and its truncate, deleting
-    * the only copy of those events. Mutations are metadata-sized (seconds
-    * at worst), so serializing them costs nothing observable. Lazy READERS
-    * racing a compact's file swap can throw transiently; every flow already
-    * catches-and-retries next cycle, which makes that self-healing.
+    * as DISCOVERED (`SaveNewFilesToDbFlow.java:216-248`). Returns the
+    * inserted count.
     */
-  def appendDiscovered(candidates: DataFrame, now: Timestamp): Long = this.synchronized {
-    val seq = nextBatchSeq()
-    val fresh = candidates
-      .select("filename", "create_date").distinct()
-      .join(events.select("filename").distinct(), Seq("filename"), "left_anti")
-      .withColumn("status", lit(FileStatus.Discovered.name))
-      .withColumn("updated_at", lit(now))
-      .withColumn("batch_seq", lit(seq))
-      .cache()
-    val n = fresh.count()
-    if (n > 0) { append(fresh); noteAppended(seq) }
-    fresh.unpersist()
-    n
+  def appendDiscovered(candidates: DataFrame, now: Timestamp): Long = {
+    val rows = candidates.select("filename", "create_date").collect()
+    this.synchronized {
+      val fresh = rows.iterator.map(r => Event(r.getString(0), r.getDate(1), FileStatus.Discovered, now, 0L))
+        .filterNot(e => files.contains(e.filename)).toSeq.distinctBy(_.filename)
+      append(fresh, FileStatus.Discovered, now)
+    }
   }
 
   /** A9 — transition the named files to `to`. Illegal transitions (per
     * [[FileStatus.legal]]) are skipped, mirroring the reference's UPDATEs
     * which are already filtered to the eligible set by the caller.
     */
-  def transition(filenames: Seq[String], to: FileStatus, now: Timestamp): Long =
-    transitionWhere(col("filename").isin(filenames: _*), to, now)
+  def transition(filenames: Seq[String], to: FileStatus, now: Timestamp): Long = this.synchronized {
+    append(filenames.distinct.flatMap(files.get).filter(movable(_, to)), to, now)
+  }
 
-  /** A9 with an arbitrary predicate over the [[current]] view. */
-  def transitionWhere(cond: org.apache.spark.sql.Column, to: FileStatus,
-      now: Timestamp): Long = this.synchronized {
-    val legalFrom = FileStatus.all.filter(f => FileStatus.canTransition(f, to) && f != to)
-      .map(_.name)
-    val seq = nextBatchSeq()
-    val hit = current.filter(cond && col("status").isin(legalFrom: _*))
-      .withColumn("status", lit(to.name))
-      .withColumn("updated_at", lit(now))
-      .withColumn("batch_seq", lit(seq))
-      .cache()
-    val n = hit.count()
-    if (n > 0) { append(hit); noteAppended(seq) }
-    hit.unpersist()
-    n
+  /** A9 with an arbitrary predicate over the [[current]] columns. */
+  def transitionWhere(cond: Column, to: FileStatus, now: Timestamp): Long = this.synchronized {
+    val from = files.values.filter(movable(_, to))
+    val hit = if (from.isEmpty) Nil
+      else frame(from).filter(cond).select("filename").collect().map(r => files(r.getString(0))).toSeq
+    append(hit, to, now)
   }
 
   /** Claim step (`UploadTickerFilesStatusAndDataFlow.java:83-94`): flip
-    * READY_FOR_PROCESSING → IN_PROGRESS and return the claimed set — the
-    * flip-before-processing is what prevents double-processing across cycles.
-    *
-    * `limit` bounds the claim to the `limit` OLDEST ready files
-    * (create_date, then filename): the collect, the transition in-list and
-    * the caller's processing batch all stay O(limit) no matter how many
-    * files are journaled — at 100M ready files an unbounded claim would be
-    * a multi-GB driver collect. The default is therefore a conservative
-    * batch ([[TickerFileJournal.DefaultClaimLimit]]), NOT unbounded:
-    * draining more than one batch per cycle is a caller loop, and an
-    * unbounded claim is deliberately not expressible through this API.
+    * READY_FOR_PROCESSING → IN_PROGRESS (the flip prevents double-processing
+    * across cycles) for the `limit` OLDEST ready files by (create_date,
+    * filename), and return them. Draining more than one batch is a caller loop.
     */
   def claimReady(now: Timestamp,
       limit: Int = TickerFileJournal.DefaultClaimLimit): Seq[(String, Date)] = this.synchronized {
     require(limit > 0, s"claimReady limit must be positive, got $limit")
-    val ready = current.filter(col("status") === FileStatus.ReadyForProcessing.name)
-      .select("filename", "create_date")
-      .sort(col("create_date"), col("filename")).limit(limit)
-      .as[(String, Date)].collect().toSeq
-    if (ready.nonEmpty) transition(ready.map(_._1), FileStatus.InProgress, now)
-    ready
+    val ready = files.values.filter(_.status == FileStatus.ReadyForProcessing).toSeq
+      .sortBy(e => (e.createDate.getTime, e.filename)).take(limit)
+    append(ready, FileStatus.InProgress, now)
+    ready.map(e => (e.filename, e.createDate))
   }
 
   // ---- Plane-A read surface (SURVEY §2.1) ----
 
   /** A1 — filenames already journaled among `names`. */
-  def knownAmong(names: Seq[String]): Seq[String] =
-    current.filter(col("filename").isin(names: _*))
-      .select("filename").as[String].collect().toSeq
+  def knownAmong(names: Seq[String]): Seq[String] = names.distinct.filter(files.contains)
 
   /** A2 — all current rows for one date. */
-  def onDate(d: Date): DataFrame = current.filter(col("create_date") === lit(d))
+  def onDate(d: Date): DataFrame =
+    frame(files.values.filter(_.createDate.toLocalDate == d.toLocalDate))
 
   /** A3 — point status lookup. */
-  def statusOf(filename: String): Option[FileStatus] =
-    current.filter(col("filename") === filename)
-      .select("status").as[String].collect().headOption.map(FileStatus.fromName)
+  def statusOf(filename: String): Option[FileStatus] = files.get(filename).map(_.status)
 
   /** A4 — current rows whose status ∈ set. */
   def byStatus(statuses: FileStatus*): DataFrame =
-    current.filter(col("status").isin(statuses.map(_.name): _*))
+    frame(files.values.filter(e => statuses.contains(e.status)))
+
+  /** A4 counts — current file count per status (absent = 0). */
+  def statusCounts: Map[FileStatus, Long] = files.values.groupMapReduce(_.status)(_ => 1L)(_ + _)
 
   /** A5 — latest create_date ever journaled (catch-up start point). */
-  def maxCreateDate: Option[Date] =
-    events.agg(max("create_date")).as[Option[Date]].head()
+  def maxCreateDate: Option[Date] = files.values.map(_.createDate).maxByOption(_.getTime)
 
   /** A6 — MIN or MAX create_date over one status. */
   def minMaxDateForStatus(fn: String, status: FileStatus): Option[Date] = {
     require(fn == "MIN" || fn == "MAX", s"fn must be MIN or MAX, got $fn")
-    byStatus(status).agg(expr(s"$fn(create_date)")).as[Option[Date]].head()
+    val dates = files.values.filter(_.status == status).map(_.createDate)
+    if (fn == "MIN") dates.minByOption(_.getTime) else dates.maxByOption(_.getTime)
   }
 
   /** A11 — current file count. */
-  def countFiles(): Long = current.count()
+  def countFiles(): Long = files.size.toLong
 
-  /** A10 — truncate. */
-  def truncate(): Unit = this.synchronized {
-    val (fs, d) = fsPath(dir)
-    if (fs.exists(d)) { fs.listStatus(d).foreach(s => fs.delete(s.getPath, true)); () }
-    cachedMaxSeq = Some(0L)
-  }
+  /** A10 — truncate: publishes an empty snapshot. */
+  def truncate(): Unit = this.synchronized { publishSnapshot(Nil) }
 
-  /** Checkpoint the event log down to the current view (delta-log-style
-    * compaction — keeps the latest-wins scan bounded as transitions
-    * accumulate).
-    *
-    * Fully distributed: the snapshot is written executor-side to a sibling
-    * temp directory and the part files are then swapped in — the current
-    * view never passes through the driver, so compacting a journal of 100M
-    * files costs a shuffle, not a multi-GB driver collect.
+  /** Folds the log into a snapshot of the current view (batch 0), so replay
+    * and [[events]] stay bounded as transitions accumulate.
     */
   def compact(now: Timestamp): Unit = this.synchronized {
-    val tmp = dir.stripSuffix("/") + ".compact-tmp"
-    val (fs, tmpPath) = fsPath(tmp)
-    if (fs.exists(tmpPath)) fs.delete(tmpPath, true)
-    current.withColumn("batch_seq", lit(0L))
-      .select("filename", "create_date", "status", "updated_at", "batch_seq")
-      .write.mode(SaveMode.Overwrite).parquet(tmp) // executes BEFORE the swap
-    truncate()
-    val (_, target) = fsPath(dir)
-    fs.mkdirs(target)
-    fs.listStatus(tmpPath).filter(_.getPath.getName.startsWith("part-")).foreach { s =>
-      val dest = new org.apache.hadoop.fs.Path(target, s.getPath.getName)
-      if (!fs.rename(s.getPath, dest))
-        throw new java.io.IOException(s"journal compact swap failed: ${s.getPath} -> $dest")
-    }
-    fs.delete(tmpPath, true)
-    cachedMaxSeq = Some(0L)
+    publishSnapshot(files.values.map(_.copy(batchSeq = 0L)).toSeq)
+  }
+
+  /** Publishes generation gen+1 by one rename, then deletes every other
+    * file. A crash before the rename leaves the old generation live; after
+    * it, the leftovers are ignored on replay and deleted by the next call.
+    */
+  private def publishSnapshot(snapshot: Seq[Event]): Unit = {
+    publish(s"${gen + 1}.snapshot", snapshot)
+    gen += 1
+    seq = 0L
+    files = snapshot.map(e => e.filename -> e).toMap
+    fs.listStatus(root).filter(_.getPath.getName != s"$gen.snapshot")
+      .foreach(s => fs.delete(s.getPath, true))
   }
 }
 
 object TickerFileJournal {
-  /** Default [[TickerFileJournal.claimReady]] batch: bounds the driver
-    * collect and the downstream processing batch regardless of how many
-    * files are ready. Matches the reference's per-cycle processing scale
-    * (a day of per-ticker files is O(100s)) with generous headroom.
+  /** Default [[TickerFileJournal.claimReady]] batch: the reference's
+    * per-cycle scale (a day of per-ticker files is O(100s)) with headroom.
     */
   val DefaultClaimLimit: Int = 10000
+
+  /** One journal event — a file's status as of `(updatedAt, batchSeq)`. */
+  final case class Event(filename: String, createDate: Date, status: FileStatus,
+      updatedAt: Timestamp, batchSeq: Long)
+
+  private val Format = "graft-journal-v1"
+  private val SnapshotFile = """(\d+)\.snapshot""".r
+  private val BatchFile = """(\d+)-(\d+)\.batch""".r
+
+  private def timestamp(millis: Long, nanos: Int): Timestamp = {
+    val t = new Timestamp(millis); t.setNanos(nanos); t
+  }
+
+  /** Folds `events` into `m`, latest `(updated_at, batch_seq)` per file. */
+  private def latestWins(m: Map[String, Event], events: Iterator[Event]): Map[String, Event] =
+    events.foldLeft(m) { (acc, e) =>
+      val keep = acc.get(e.filename).exists { p =>
+        val c = p.updatedAt.compareTo(e.updatedAt)
+        c > 0 || (c == 0 && p.batchSeq > e.batchSeq)
+      }
+      if (keep) acc else acc.updated(e.filename, e)
+    }
 }

@@ -119,14 +119,7 @@ object Lifecycle {
           journal.transition(claimed.map(_._1), FileStatus.Error, now)
           ProcessReport(claimed.size, 0, claimed.size, 0L, 0L)
       }
-    // Backlog signal, computed OUTSIDE the try above: this read is not under
-    // the journal lock, so it can transiently fail racing a compact's file
-    // swap — inside the try that would have relabeled a fully successful
-    // batch as errored. Failing toward 0 merely defers the drain one cycle.
-    val remaining =
-      try journal.byStatus(FileStatus.ReadyForProcessing).count()
-      catch { case _: Exception => 0L }
-    base.copy(remainingReady = remaining)
+    base.copy(remainingReady = journal.statusCounts.getOrElse(FileStatus.ReadyForProcessing, 0L))
   }
 
   /** Crash recovery — run once at startup, before the first [[processReady]]
@@ -162,8 +155,7 @@ object Lifecycle {
     * mean local-disk-only: the walk goes through the Hadoop FileSystem
     * (like every other maintenance path), so the same GC runs against an
     * HDFS/object-store inbox. Work stays proportional to the GC-eligible
-    * dirs: the journal collect is IN-filtered to those dates, and listing
-    * is one listStatus per eligible dir.
+    * dirs: one listStatus per eligible dir, and one journal lookup per file.
     */
   def cleanup(journal: TickerFileJournal, dataRoot: String, today: LocalDate): CleanupReport = {
     val minF = journal.minMaxDateForStatus("MIN", FileStatus.Finished).map(_.toLocalDate)
@@ -179,31 +171,18 @@ object Lifecycle {
         var deleted = 0
         var kept = 0
         val deletedDirs = scala.collection.mutable.ArrayBuffer[String]()
-        // Collect only the statuses of files in GC-eligible date dirs: the
-        // create_date IN-filter keeps the driver collect proportional to the
-        // dirs being deleted (and partition-prunes when the journal is
-        // date-partitioned), not to the whole journal.
-        val eligibleDates = dateDirs.map(d => LocalDate.parse(d.getPath.getName))
-          .filter(_.plusDays(1).isBefore(hi))
-          .map(Date.valueOf)
-        val statuses =
-          if (eligibleDates.isEmpty) Map.empty[String, String]
-          else journal.current
-            .filter(col("create_date").isin(eligibleDates.toIndexedSeq: _*))
-            .select("filename", "status")
-            .collect().map(r => r.getString(0) -> r.getString(1)).toMap
         dateDirs.foreach { dir =>
           val dirDate = LocalDate.parse(dir.getPath.getName)
           if (dirDate.plusDays(1).isBefore(hi)) {
             fs.listStatus(dir.getPath).filter(_.isFile).foreach { f =>
-              statuses.get(f.getPath.getName) match {
-                case Some(s) if s == FileStatus.Finished.name =>
+              journal.statusOf(f.getPath.getName) match {
+                case Some(FileStatus.Finished) =>
                   // count only CONFIRMED deletes: on a remote filesystem a
                   // delete can fail (permissions, lease) and a report that
                   // claims the file was GC'd while it remains would mislead
                   // whoever monitors the cleanup cadence
                   if (fs.delete(f.getPath, false)) deleted += 1
-                case Some(s) if s == FileStatus.Error.name => kept += 1
+                case Some(FileStatus.Error) => kept += 1
                 case _ => () // unknown to the journal: leave untouched
               }
             }

@@ -1,6 +1,6 @@
 package graft.schema
 
-import java.sql.{Date, Timestamp}
+import java.sql.Timestamp
 import org.apache.spark.sql.types._
 
 /** File lifecycle status ADT — the 6-state machine of the reference
@@ -40,21 +40,6 @@ object FileStatus {
   def canTransition(from: FileStatus, to: FileStatus): Boolean =
     from == to || legal(from).contains(to)
 }
-
-/** One ticker quote row — the 9-column CSV of `/root/reference/README.md:12-21`.
-  * The reference never parses the numeric fields; we declare them typed.
-  */
-case class TickerRow(
-    ticker: String, sequence: Long, price: Double, size: Double,
-    bestAsk: Double, bestAskSize: Double, bestBid: Double, bestBidSize: Double,
-    transactionTime: Timestamp)
-
-/** One journal event for a ticker file — append-only; the mutable `status`
-  * column of the reference's `ticker_files` table is emulated as
-  * latest-wins over `updated_at` (SURVEY §2.1 op 9).
-  */
-case class TickerFileMeta(
-    filename: String, create_date: Date, status: String, updated_at: Timestamp)
 
 /** One shipped log record (`/root/reference/MainService/src/main/resources/LogMsgLayout.json:1-30`). */
 case class LogRecord(

@@ -17,8 +17,8 @@ import graft.journal.TickerFileJournal
   *
   * 100 TB design: discovery moves *metadata only* — the binaryFile source's
   * content column is pruned out before it is ever read, so a trigger over a
-  * million files ships paths, not bytes. The journal anti-join broadcasts
-  * the tiny per-batch candidate set.
+  * million files ships paths, not bytes. The journal dedups each batch's
+  * candidate names against its driver-side map.
   */
 object Discovery {
 
@@ -57,8 +57,8 @@ object Discovery {
     journal.appendDiscovered(fileMeta(files.toDF("path")), now)
   }
 
-  /** B2+B3+B6 — the streaming discovery query. Each micro-batch anti-joins
-    * the journal and appends the survivors as DISCOVERED. `now` is supplied
+  /** B2+B3+B6 — the streaming discovery query. Each micro-batch appends
+    * the files the journal has not seen as DISCOVERED. `now` is supplied
     * per batch for testability (wall clock in production).
     */
   def stream(spark: SparkSession, journal: TickerFileJournal, dataRoot: String,

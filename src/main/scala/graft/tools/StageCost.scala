@@ -79,10 +79,11 @@ object StageCost {
         f"${s.srRec}%9d ${s.swB / 1048576.0}%7.1f ${s.swRec}%9d ${s.tasks}%5d  ${s.nameLine}")
     }
     val totRun = stages.map(_.runMs).sum
+    val cores = spark.sparkContext.defaultParallelism
     val totCpu = stages.map(_.cpuMs).sum
     println(f"[stagecost] totals: run=${totRun}ms cpu=${totCpu}ms " +
       f"gc=${stages.map(_.gcMs).sum}ms wall=${wall}%.3f s " +
-      f"(run/32 = ${totRun / 32}ms — perfectly parallel floor)")
+      f"(run/$cores = ${totRun / cores}ms — perfectly parallel floor)")
     spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ingest.TickerIngest
+import graft.ingest.{FileOutcome, TickerIngest}
 
 /** Ingest-path details beyond the Flow3 e2e: GZIP codec (the reference
   * compresses every upload — B13; Spark decompresses *.gz natively),
@@ -41,6 +41,32 @@ class IngestSpec extends SparkSpec {
     val quarantined = spark.read.parquet(qd)
     assert(quarantined.count() == 1)
     assert(quarantined.select("_corrupt_record").as[String].head() == "not,a,valid,row")
+  }
+
+  test("malformed rows: arity, type and timestamp errors are quarantined, never loaded") {
+    val root = tmpDir("bad")
+    new java.io.File(s"$root/2024-03-14").mkdirs()
+    val name = "SOL-USDT_PST_2024-03-14"
+    def row(seq: String, price: String, at: String) =
+      s"SOL-USDT,$seq,$price,15.2,0.6125,100.0,0.6121,80.5,$at"
+    val at = "2024-03-14T12:34:56.123"
+    val bad = Seq(
+      "SOL-USDT,5,0.6123,15.2",      // truncated arity
+      row("6", "n/a", at),           // non-numeric price
+      row("s7", "0.6123", at),       // non-numeric sequence
+      row("8", "0.6123", "not-a-time")) // unparseable timestamp
+    val lines = Seq(row("1", "0.6123", at), bad(0), row("2", "0.6123", at)) ++
+      bad.tail :+ row("3", "0.6123", at)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/2024-03-14/$name"),
+      lines.mkString("\n").getBytes)
+    val wh = tmpDir("badwh")
+    val qd = tmpDir("badq")
+    val report = TickerIngest.ingest(spark, Seq(s"$root/2024-03-14/$name"), wh, Some(qd))
+    assert(report.outcomes == Seq(FileOutcome(name, 3, 4)))
+    assert(report.totalRows == 3 && report.totalCorrupt == 4)
+    assert(spark.read.parquet(qd).select("_corrupt_record").as[String].collect().toSet == bad.toSet)
+    val loaded = TickerIngest.warehouse(spark, wh)
+    assert(loaded.select("sequence").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
   test("commit survives a RELATIVE warehouse path and sweeps abandoned staging") {

@@ -121,10 +121,10 @@ class JournalSpec extends SparkSpec {
     assert(j.current.collect().toSeq == before)
   }
 
-  test("compact at scale is distributed (multi-file snapshot, no driver collect)") {
+  test("compact at scale folds 12.5k events into a 5k-file snapshot") {
     val j = freshJournal()
     // one DISCOVERED batch of 5k files + 3 transition batches = 4 appends,
-    // 12.5k events; large enough that the snapshot write fans out
+    // 12.5k events
     val names = (1 to 5000).map(i => f"tick$i%05d")
     j.appendDiscovered(
       names.toDF("filename").withColumn("create_date", lit("2024-08-06").cast("date")),
@@ -189,6 +189,59 @@ class JournalSpec extends SparkSpec {
     // the view is still answerable post-compact
     assert(j.statusOf("t0000000").contains(FileStatus.InProgress))
     assert(j.statusOf("t0000001").contains(FileStatus.ReadyForProcessing))
+  }
+
+  test("compaction crash points: a reopened journal keeps the current view") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    def copyDir(from: String, to: String): Unit =
+      Files.list(Paths.get(from)).forEach(f => Files.copy(f,
+        Paths.get(to).resolve(f.getFileName), StandardCopyOption.REPLACE_EXISTING))
+    def view(j: TickerFileJournal) = j.current.collect().map(_.toString).toSet
+    // history across a snapshot and the batches after it
+    val j = freshJournal()
+    j.appendDiscovered(candidates("a" -> "2024-08-06", "b" -> "2024-08-07"), ts("2024-08-08 10:00:00"))
+    j.transition(Seq("a"), FileStatus.ReadyForProcessing, ts("2024-08-08 10:01:00"))
+    j.compact(ts("2024-08-08 10:02:00"))
+    j.transition(Seq("a"), FileStatus.InProgress, ts("2024-08-08 10:03:00"))
+    j.transition(Seq("b"), FileStatus.ReadyForProcessing, ts("2024-08-08 10:04:00"))
+    val before = view(j)
+    val old = tmpDir("journal-old")
+    copyDir(j.dir, old) // the log as the next compaction finds it
+    j.compact(ts("2024-08-08 10:05:00"))
+    val published = new java.io.File(j.dir).list().filterNot(_.startsWith(".")).toSeq
+    assert(published.size == 1, s"compaction left $published")
+
+    // crash after the new snapshot is published, before the old files go
+    val afterPublish = tmpDir("journal-crash-published")
+    copyDir(old, afterPublish)
+    copyDir(j.dir, afterPublish)
+    assert(view(new TickerFileJournal(spark, afterPublish)) == before)
+
+    // crash mid-publish: a half-written temp file beside the old log
+    val midPublish = tmpDir("journal-crash-tmp")
+    copyDir(old, midPublish)
+    val snap = Files.readAllBytes(Paths.get(j.dir, published.head))
+    Files.write(Paths.get(midPublish, published.head + ".tmp"), snap.take(snap.length / 2))
+    val reopened = new TickerFileJournal(spark, midPublish)
+    assert(view(reopened) == before)
+    // the journal keeps working from there, and the next compaction clears the leftovers
+    reopened.transition(Seq("b"), FileStatus.InProgress, ts("2024-08-08 10:06:00"))
+    reopened.compact(ts("2024-08-08 10:07:00"))
+    assert(new java.io.File(midPublish).list().count(!_.startsWith(".")) == 1)
+    assert(new TickerFileJournal(spark, midPublish).statusOf("b").contains(FileStatus.InProgress))
+    assert(view(new TickerFileJournal(spark, midPublish)) == view(reopened))
+  }
+
+  test("A10 truncate empties the journal, also across a reopen") {
+    val j = freshJournal()
+    j.appendDiscovered(candidates("a" -> "2024-08-06"), ts("2024-08-08 10:00:00"))
+    j.truncate()
+    assert(j.countFiles() == 0 && j.maxBatchSeq == 0)
+    assert(new TickerFileJournal(spark, j.dir).countFiles() == 0)
+    // appends after a truncate start again at batch 1
+    j.appendDiscovered(candidates("b" -> "2024-08-06"), ts("2024-08-08 10:01:00"))
+    assert(new TickerFileJournal(spark, j.dir).knownAmong(Seq("a", "b")) == Seq("b"))
+    assert(j.maxBatchSeq == 1)
   }
 
   test("concurrent mutators + compactions lose nothing (PipelineApp thread model)") {

@@ -43,6 +43,22 @@ class Round19OpsSpec extends AnyFunSuite with SparkSpec {
     assert(m == Map("x_kcore" -> 2.43, "q1_pricing" -> 0.61))
   }
 
+  test("statusLine: a refused 30-key line stays within 1700 chars") {
+    // every shown query costs three entries on a refused line, and the
+    // cqueries wrapper rides once — the running budget must count them all
+    val keys = (1 to 30).map(i => f"q_a_rather_long_query_name_$i%02d")
+    val results = keys.zipWithIndex.map { case (k, i) => k -> ((100.0 + i, 90.0 + i)) }
+    val line = Bench.statusLine(""""value":169.81,"unit":"sec","n":30""",
+      """"failed":0,"canary":[0.31,0.29]""", results, Some(keys.map(_ -> 123.45).toMap),
+      """"full":"BENCH_FULL_c4.json","sf":"/data/sf0.1","refused":"canary loaded"""")
+    assert(line.length <= 1700, s"${line.length} chars")
+    val shown = Bench.boardMap(line, "queries").keySet
+    assert(shown.nonEmpty && shown.size < 30, s"${shown.size} shown")
+    assert(Bench.boardMap(line, "qmin").keySet == shown)
+    assert(Bench.boardMap(line, "cqueries").keySet == shown)
+    assert(line.contains(s""""shown":${shown.size},"""))
+  }
+
   // ---- Tables schema cache ----
 
   test("schema cache replaces a path's entry on rewrite and serves the new schema") {
