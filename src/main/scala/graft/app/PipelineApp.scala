@@ -243,6 +243,7 @@ object PipelineApp {
     println(s"[demo] advance: toDownloading=$down toReady=$ready")
     // Flow 3
     val rep = Lifecycle.processReady(spark, journal, root, warehouseDir, now(),
+      quarantineDir = Some(s"$warehouseDir/_quarantine"),
       retry = RetryPolicy(cfg.ingest.maxFlushAttempts, cfg.ingest.sleepOnRetryMs))
     println(s"[demo] process: claimed=${rep.claimed} finished=${rep.finished} " +
       s"rows=${rep.rows} corrupt=${rep.corruptRows}")
@@ -424,6 +425,9 @@ object PipelineApp {
         Lifecycle.advanceStatuses(journal, LocalDate.now(), now())
       }
     }
+    // malformed rows are kept beside the warehouse (underscore-prefixed, so
+    // warehouse reads skip them), like the _corpus and _drift_* stores
+    val quarantine = Some(s"$warehouseDir/_quarantine")
     every("uploadData", cfg.uploadData.workCycleSec) {
       // two retry layers, as in the reference: the uploader's flush retry
       // (maxFlushDataAttempts/sleepOnReconnectMs) around the ingest itself,
@@ -436,10 +440,12 @@ object PipelineApp {
         // quarantined set waits for manual ERROR->READY re-queue and the
         // next fixed-delay cycle picks up the rest
         var rep = Lifecycle.processReady(spark, journal, root, warehouseDir, now(),
+          quarantineDir = quarantine,
           retry = RetryPolicy(cfg.ingest.maxFlushAttempts, cfg.ingest.sleepOnRetryMs),
           external = externalSink)
         while (rep.finished > 0 && rep.errored == 0 && rep.remainingReady > 0) {
           rep = Lifecycle.processReady(spark, journal, root, warehouseDir, now(),
+            quarantineDir = quarantine,
             retry = RetryPolicy(cfg.ingest.maxFlushAttempts, cfg.ingest.sleepOnRetryMs),
             external = externalSink)
         }

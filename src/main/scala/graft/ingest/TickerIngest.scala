@@ -1,6 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.schema.Schemas
 
@@ -58,7 +60,7 @@ object TickerIngest {
   def corruptRows(df: DataFrame): DataFrame = df.filter(col("_corrupt_record").isNotNull)
 
   /** A fully-written but uncommitted ingest: every fallible step (read,
-    * validate, both writes, the outcome aggregate) has already happened into
+    * validate, both writes, the outcome counts) has already happened into
     * `_staging/<uuid>` directories (underscore-prefixed, so readers never
     * see them); [[commit]] renames the data files into place. Retrying
     * [[stage]] after a failure is safe — nothing public was touched and an
@@ -68,14 +70,47 @@ object TickerIngest {
       stagingWh: String, warehouseDir: String,
       stagingQr: Option[String], quarantineDir: Option[String])
 
-  /** The fallible phase of the load — safe to retry. Writes valid rows
-    * (partitioned by file_date) and quarantine rows into fresh staging
-    * dirs and computes the per-file outcome (B14: the staged write is the
-    * barrier, the filename group-by the attribution). Valid rows per file
-    * are counted from the staged warehouse output, which the parser
-    * type-checked in full; every other row of the file is corrupt. Counting
-    * from a second parse would be wrong: the CSV parser type-checks only
-    * the columns a plan requires, so a count plan misses type errors.
+  /** Per-file (parsed, valid) row counts, the observed metric of the staged
+    * write (B14: the write is the barrier, the filename map the attribution).
+    */
+  private type Counts = Map[String, (Long, Long)]
+  private object FileCounts extends Aggregator[(String, Boolean), Counts, Counts] {
+    def zero: Counts = Map.empty
+    def reduce(b: Counts, in: (String, Boolean)): Counts = add(b, in._1, (1L, if (in._2) 1L else 0L))
+    def merge(a: Counts, b: Counts): Counts = b.foldLeft(a) { case (acc, (f, c)) => add(acc, f, c) }
+    def finish(r: Counts): Counts = r
+    private def add(m: Counts, f: String, c: (Long, Long)): Counts = {
+      val (n, ok) = m.getOrElse(f, (0L, 0L))
+      m.updated(f, (n + c._1, ok + c._2))
+    }
+    def bufferEncoder: Encoder[Counts] = ExpressionEncoder[Counts]()
+    def outputEncoder: Encoder[Counts] = ExpressionEncoder[Counts]()
+  }
+  private val fileCounts = udaf(FileCounts)
+
+  /** Write tasks for a batch of `bytes` input bytes: one per `T` bytes, with
+    * `T = min(maxPartitionBytes, max(openCostInBytes, bytes / parallelism))`
+    * — Spark's own split-size rule, so a small batch is one task and one
+    * part file per date, a mid-sized one spreads over the cores, and a huge
+    * one never gives a task more than a split.
+    */
+  def writeTasks(bytes: Long, maxPartitionBytes: Long, openCostInBytes: Long,
+      parallelism: Int): Int = {
+    def ceilDiv(a: Long, b: Long) = (a + b - 1) / b
+    val t = math.min(maxPartitionBytes,
+      math.max(openCostInBytes, ceilDiv(bytes, math.max(parallelism, 1).toLong)))
+    math.max(1L, ceilDiv(bytes, math.max(t, 1L))).toInt
+  }
+
+  /** The fallible phase of the load — safe to retry. One Spark job parses
+    * the batch once, writes its valid rows (partitioned by file_date) into a
+    * fresh staging dir in [[writeTasks]] tasks, and observes each file's
+    * parsed and valid row counts in that write's result stage, where Spark
+    * applies each partition's metrics once even under task retry. The write
+    * needs every column, so the parser type-checks every field and the
+    * counts are exact for arity, type and timestamp errors. Only a batch
+    * with corrupt rows runs a second job, the quarantine write. A failed
+    * write throws before its observation is read.
     */
   def stage(spark: SparkSession, paths: Seq[String], warehouseDir: String,
       quarantineDir: Option[String] = None): StagedIngest = {
@@ -85,21 +120,24 @@ object TickerIngest {
     val token = java.util.UUID.randomUUID().toString
     val stagingWh = s"$warehouseDir/_staging/$token"
     val stagingQr = quarantineDir.map(q => s"$q/_staging/$token")
-    zorderCluster(spark, validRows(df))
+    val (fs, _) = HadoopFs.forPath(spark, paths.head)
+    val bytes = paths.map(p => fs.getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen).sum
+    val conf = spark.sessionState.conf
+    val tasks = writeTasks(bytes, conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes,
+      spark.sparkContext.defaultParallelism)
+    val counts = org.apache.spark.sql.Observation(s"ingest_counts_$token")
+    validRows(zorderCluster(spark, df.coalesce(tasks))
+      .observe(counts, fileCounts(col("filename"), col("_corrupt_record").isNull).as("files")))
       .write.mode(SaveMode.Append)
       .partitionBy("file_date")
       .parquet(stagingWh)
-    stagingQr.foreach(q => corruptRows(df).write.mode(SaveMode.Append).parquet(q))
-    // one job: every parsed row counts toward n, every staged row toward ok
-    val parsed = df.select(col("filename"), lit(1L).as("n"), lit(0L).as("ok"))
-    val kept = spark.read.schema("filename STRING").parquet(stagingWh)
-      .select(col("filename"), lit(0L).as("n"), lit(1L).as("ok"))
-    val outcomes = parsed.union(kept).groupBy("filename").agg(sum("n"), sum("ok")).collect()
-      .map(r => FileOutcome(r.getString(0), r.getLong(2), r.getLong(1) - r.getLong(2)))
-      .sortBy(_.filename).toSeq
-    StagedIngest(
-      IngestReport(outcomes, outcomes.map(_.rows).sum, outcomes.map(_.corrupt_rows).sum),
-      stagingWh, warehouseDir, stagingQr, quarantineDir)
+    val outcomes = counts.get("files").asInstanceOf[scala.collection.Map[String, Row]]
+      .map { case (f, c) => FileOutcome(f, c.getLong(1), c.getLong(0) - c.getLong(1)) }
+      .toSeq.sortBy(_.filename)
+    val report = IngestReport(outcomes, outcomes.map(_.rows).sum, outcomes.map(_.corrupt_rows).sum)
+    if (report.totalCorrupt > 0)
+      stagingQr.foreach(q => corruptRows(df).write.mode(SaveMode.Append).parquet(q))
+    StagedIngest(report, stagingWh, warehouseDir, stagingQr, quarantineDir)
   }
 
   /** Optional z-order clustering of the staged warehouse write (off by
@@ -237,32 +275,28 @@ object TickerIngest {
     if (fs.exists(root)) { fs.delete(root, true); () }
   }
 
+  /** Renames every data file under `src` to the same relative path under
+    * `dst`, then drops the staging skeleton (_SUCCESS etc.). Walks with
+    * `listStatus`: `listFiles` builds a `LocatedFileStatus` per file, and
+    * Hadoop's local FileSystem forks `ls -ld` for each one when libhadoop is
+    * absent.
+    */
   private def moveTree(spark: SparkSession, src: String, dst: String): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(src).getFileSystem(spark.sessionState.newHadoopConf())
-    // qualify BEFORE computing the strip prefix: listFiles returns fully
-    // qualified paths, so an unqualified (e.g. relative) src would fail to
-    // strip, the file would "rename" onto its own absolute path, and the
-    // staging delete below would destroy the only copy of the rows
     val srcPath = fs.makeQualified(new Path(src))
     val dstPath = fs.makeQualified(new Path(dst))
     fs.mkdirs(dstPath)
     if (!fs.exists(srcPath)) return
-    val srcPrefix = srcPath.toUri.getPath.stripSuffix("/") + "/"
-    val it = fs.listFiles(srcPath, true)
-    while (it.hasNext) {
-      val f = it.next()
+    def walk(from: Path, to: Path): Unit = fs.listStatus(from).foreach { f =>
       val name = f.getPath.getName
-      if (f.isFile && !name.startsWith("_") && !name.startsWith(".")) {
-        val rel = f.getPath.toUri.getPath.stripPrefix(srcPrefix)
-        require(!rel.startsWith("/"), s"unexpected staging layout: $rel outside $srcPrefix")
-        val dest = new Path(dstPath, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f.getPath, dest))
-          throw new java.io.IOException(s"rename failed: ${f.getPath} -> $dest")
-      }
+      if (f.isDirectory) { fs.mkdirs(new Path(to, name)); walk(f.getPath, new Path(to, name)) }
+      else if (!name.startsWith("_") && !name.startsWith(".") &&
+          !fs.rename(f.getPath, new Path(to, name)))
+        throw new java.io.IOException(s"rename failed: ${f.getPath} -> ${new Path(to, name)}")
     }
-    fs.delete(srcPath, true) // drop the staging skeleton (_SUCCESS etc.)
+    walk(srcPath, dstPath)
+    fs.delete(srcPath, true)
     ()
   }
 

@@ -5,7 +5,7 @@ import java.sql.{Date, Timestamp}
 import java.time.LocalDate
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField}
 import graft.schema.{FileStatus, Schemas}
 
@@ -127,17 +127,14 @@ class TickerFileJournal(val spark: SparkSession, val dir: String) {
   /** Highest batch_seq in the log (0 when empty or just compacted). */
   def maxBatchSeq: Long = this.synchronized(seq)
 
-  /** B6 — journal the unseen subset of `candidates(filename, create_date)`
+  /** B6 — journal the unseen subset of `candidates` `(filename, create_date)`
     * as DISCOVERED (`SaveNewFilesToDbFlow.java:216-248`). Returns the
     * inserted count.
     */
-  def appendDiscovered(candidates: DataFrame, now: Timestamp): Long = {
-    val rows = candidates.select("filename", "create_date").collect()
-    this.synchronized {
-      val fresh = rows.iterator.map(r => Event(r.getString(0), r.getDate(1), FileStatus.Discovered, now, 0L))
-        .filterNot(e => files.contains(e.filename)).toSeq.distinctBy(_.filename)
-      append(fresh, FileStatus.Discovered, now)
-    }
+  def appendDiscovered(candidates: Seq[(String, Date)], now: Timestamp): Long = this.synchronized {
+    val fresh = candidates.iterator.map { case (f, d) => Event(f, d, FileStatus.Discovered, now, 0L) }
+      .filterNot(e => files.contains(e.filename)).toSeq.distinctBy(_.filename)
+    append(fresh, FileStatus.Discovered, now)
   }
 
   /** A9 — transition the named files to `to`. Illegal transitions (per
@@ -148,12 +145,9 @@ class TickerFileJournal(val spark: SparkSession, val dir: String) {
     append(filenames.distinct.flatMap(files.get).filter(movable(_, to)), to, now)
   }
 
-  /** A9 with an arbitrary predicate over the [[current]] columns. */
-  def transitionWhere(cond: Column, to: FileStatus, now: Timestamp): Long = this.synchronized {
-    val from = files.values.filter(movable(_, to))
-    val hit = if (from.isEmpty) Nil
-      else frame(from).filter(cond).select("filename").collect().map(r => files(r.getString(0))).toSeq
-    append(hit, to, now)
+  /** A9 with an arbitrary predicate over each file's current event. */
+  def transitionWhere(cond: Event => Boolean, to: FileStatus, now: Timestamp): Long = this.synchronized {
+    append(files.values.filter(e => movable(e, to) && cond(e)).toSeq, to, now)
   }
 
   /** Claim step (`UploadTickerFilesStatusAndDataFlow.java:83-94`): flip
@@ -185,6 +179,10 @@ class TickerFileJournal(val spark: SparkSession, val dir: String) {
   /** A4 — current rows whose status ∈ set. */
   def byStatus(statuses: FileStatus*): DataFrame =
     frame(files.values.filter(e => statuses.contains(e.status)))
+
+  /** A4 names — filenames currently in `status`. */
+  def filesWith(status: FileStatus): Seq[String] =
+    files.values.filter(_.status == status).map(_.filename).toSeq
 
   /** A4 counts — current file count per status (absent = 0). */
   def statusCounts: Map[FileStatus, Long] = files.values.groupMapReduce(_.status)(_ => 1L)(_ + _)

@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import java.sql.{Date, Timestamp}
+import java.sql.Timestamp
 import java.time.LocalDate
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.ingest.{IngestReport, TickerIngest}
 import graft.journal.TickerFileJournal
 import graft.schema.FileStatus
@@ -40,14 +39,11 @@ object Lifecycle {
     */
   def advanceStatuses(journal: TickerFileJournal, today: LocalDate,
       now: Timestamp): (Long, Long) = {
-    val t = Date.valueOf(today)
-    val toReady = journal.transitionWhere(
-      col("create_date") < lit(t) &&
-        col("status").isin(FileStatus.Discovered.name, FileStatus.Downloading.name),
+    val toReady = journal.transitionWhere(e => e.createDate.toLocalDate.isBefore(today) &&
+      (e.status == FileStatus.Discovered || e.status == FileStatus.Downloading),
       FileStatus.ReadyForProcessing, now)
-    val toDownloading = journal.transitionWhere(
-      col("create_date") === lit(t) && col("status") === FileStatus.Discovered.name,
-      FileStatus.Downloading, now)
+    val toDownloading = journal.transitionWhere(e => e.createDate.toLocalDate.isEqual(today) &&
+      e.status == FileStatus.Discovered, FileStatus.Downloading, now)
     (toDownloading, toReady)
   }
 
@@ -135,8 +131,7 @@ object Lifecycle {
     * after recovery is still exactly-once.
     */
   def recoverOrphaned(journal: TickerFileJournal, now: Timestamp): Long = {
-    val orphaned = journal.byStatus(FileStatus.InProgress)
-      .select("filename").collect().map(_.getString(0)).toSeq
+    val orphaned = journal.filesWith(FileStatus.InProgress)
     if (orphaned.isEmpty) 0L
     else {
       journal.transition(orphaned, FileStatus.Error, now)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.sql.Timestamp
+import java.sql.{Date, Timestamp}
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,20 +41,16 @@ object Discovery {
     // shared filesystem/object prefix at scale, and the date-dir range
     // filter keeps the listing one listStatus per unseen day.
     val (fs, rootPath) = graft.ingest.HadoopFs.forPath(spark, dataRoot)
-    val dirs =
-      (if (fs.exists(rootPath)) fs.listStatus(rootPath)
-       else Array.empty[org.apache.hadoop.fs.FileStatus])
-        .filter(_.isDirectory)
-        .filter { d =>
-          scala.util.Try(LocalDate.parse(d.getPath.getName)).toOption.exists { dd =>
-            from.forall(f => !dd.isBefore(f)) && !dd.isAfter(today)
-          }
-        }
-    val files = dirs.flatMap(d => fs.listStatus(d.getPath))
-      .filter(_.isFile).map(_.getPath.toUri.getPath).toSeq
-    if (files.isEmpty) return 0L
-    import spark.implicits._
-    journal.appendDiscovered(fileMeta(files.toDF("path")), now)
+    val files = (if (fs.exists(rootPath)) fs.listStatus(rootPath)
+        else Array.empty[org.apache.hadoop.fs.FileStatus]).toSeq
+      .filter(_.isDirectory)
+      .flatMap { d =>
+        scala.util.Try(LocalDate.parse(d.getPath.getName)).toOption
+          .filter(dd => from.forall(f => !dd.isBefore(f)) && !dd.isAfter(today)).toSeq
+          .flatMap(dd => fs.listStatus(d.getPath).filter(_.isFile)
+            .map(f => (f.getPath.getName, Date.valueOf(dd))))
+      }
+    if (files.isEmpty) 0L else journal.appendDiscovered(files, now)
   }
 
   /** B2+B3+B6 — the streaming discovery query. Each micro-batch appends
@@ -82,7 +78,8 @@ object Discovery {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        journal.appendDiscovered(fileMeta(batch), nowFn())
+        journal.appendDiscovered(
+          fileMeta(batch).collect().map(r => (r.getString(0), r.getDate(1))).toSeq, nowFn())
         ()
       }
       .start()

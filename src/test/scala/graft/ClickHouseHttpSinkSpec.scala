@@ -232,10 +232,7 @@ class ClickHouseHttpSinkSpec extends SparkSpec {
         java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/$date/$name"),
           ("AVA-USDT,1,0.5,15.2,0.501,100.0,0.499,80.5,2024-03-14T12:34:56.123\n" +
            "AVA-USDT,2,0.6,15.2,0.601,100.0,0.599,80.5,2024-03-14T12:35:56.123").getBytes)
-        j.appendDiscovered(
-          Seq((name, date)).toDF("filename", "cd")
-            .select(col("filename"), col("cd").cast("date").as("create_date")),
-          ts(s"$at:00"))
+        j.appendDiscovered(Seq((name, dt(date))), ts(s"$at:00"))
         j.transition(Seq(name), graft.schema.FileStatus.ReadyForProcessing, ts(s"$at:30"))
         ()
       }

@@ -46,12 +46,7 @@ class DiscoveryStreamSpec extends SparkSpec {
     touch(root, "2024-08-07", "recent")
     val j = new TickerFileJournal(spark, tmpDir("journal"))
     // journal already knows 2024-08-06 → only >= 2024-08-06 dirs are scanned
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    j.appendDiscovered(
-      Seq(("seen", "2024-08-06")).toDF("filename", "cd")
-        .select(col("filename"), col("cd").cast("date").as("create_date")),
-      ts("2024-08-08 09:00:00"))
+    j.appendDiscovered(Seq(("seen", dt("2024-08-06"))), ts("2024-08-08 09:00:00"))
     val n = Discovery.catchUp(spark, j, root, LocalDate.parse("2024-08-08"),
       ts("2024-08-08 10:00:00"))
     assert(n == 1)

@@ -195,10 +195,7 @@ class ExtensionsSpec extends SparkSpec {
   test("journal survives a process restart (new instance, same dir)") {
     val dir = tmpDir("restartJournal")
     val j1 = new TickerFileJournal(spark, dir)
-    j1.appendDiscovered(
-      Seq(("f1", "2024-08-07")).toDF("filename", "cd")
-        .select(col("filename"), col("cd").cast("date").as("create_date")),
-      ts("2024-08-08 10:00:00"))
+    j1.appendDiscovered(Seq(("f1", dt("2024-08-07"))), ts("2024-08-08 10:00:00"))
     j1.transition(Seq("f1"), FileStatus.ReadyForProcessing, ts("2024-08-08 10:01:00"))
     // "restart": a fresh instance over the same directory
     val j2 = new TickerFileJournal(spark, dir)

@@ -1,7 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graft.SparkInternals
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.ingest.{FileOutcome, TickerIngest}
+import graft.journal.TickerFileJournal
+import graft.pipeline.{Lifecycle, RetryPolicy}
+import graft.schema.FileStatus
 
 /** Ingest-path details beyond the Flow3 e2e: GZIP codec (the reference
   * compresses every upload — B13; Spark decompresses *.gz natively),
@@ -109,5 +115,112 @@ class IngestSpec extends SparkSpec {
     assert(r.getAs[Long]("sequence") == 123456789L)
     assert(r.getAs[java.sql.Timestamp]("transactionTime") ==
       ts("2024-03-14 12:34:56.123"))
+  }
+
+  /** Runs `body` and counts the Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    SparkInternals.drainListenerBus(sc)
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      SparkInternals.drainListenerBus(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Runs `body` on another thread, failing instead of hanging past `seconds`. */
+  private def within[T](seconds: Int)(body: => T): T = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    Await.result(Future(body)(ExecutionContext.global), scala.concurrent.duration.Duration(seconds, "s"))
+  }
+
+  private def tickerFile(root: String, date: String, name: String, lines: Seq[String]): String = {
+    new java.io.File(s"$root/$date").mkdirs()
+    val path = s"$root/$date/$name"
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), lines.mkString("\n").getBytes)
+    path
+  }
+
+  private def tick(ticker: String, seq: Int, date: String) =
+    s"$ticker,$seq,0.6123,15.2,0.6125,100.0,0.6121,80.5,${date}T12:34:56.123"
+
+  test("one job per clean batch, quarantine or not; one part file per file_date") {
+    val root = tmpDir("jobs")
+    val paths = for (d <- Seq("2024-03-14", "2024-03-15"); t <- Seq("AVA-USDT", "BTC-USDT"))
+      yield tickerFile(root, d, s"${t}_PST_$d", (1 to 50).map(tick(t, _, d)))
+    val wh = tmpDir("jobswh")
+    val (staged, jobs) = jobsOf(TickerIngest.stage(spark, paths, wh))
+    assert(jobs == 1)
+    assert(staged.report.totalRows == 200 && staged.report.totalCorrupt == 0)
+    TickerIngest.commit(spark, staged)
+    for (d <- Seq("2024-03-14", "2024-03-15"))
+      assert(new java.io.File(s"$wh/file_date=$d").list().count(_.startsWith("part-")) == 1, d)
+    val (withQr, jobsQr) = jobsOf(TickerIngest.stage(spark, paths, tmpDir("jobswh2"), Some(tmpDir("jobsq"))))
+    assert(jobsQr == 1)
+    assert(withQr.report.outcomes.map(_.rows) == Seq(50L, 50L, 50L, 50L))
+  }
+
+  test("a batch with malformed rows and a quarantine dir runs two jobs") {
+    val root = tmpDir("jobsbad")
+    val d = "2024-03-14"
+    val path = tickerFile(root, d, s"SOL-USDT_PST_$d",
+      Seq(tick("SOL-USDT", 1, d), "SOL-USDT,2,0.6", tick("SOL-USDT", 3, d).replace("0.6123", "n/a")))
+    val qd = tmpDir("jobsbadq")
+    val (staged, jobs) = jobsOf(TickerIngest.stage(spark, Seq(path), tmpDir("jobsbadwh"), Some(qd)))
+    assert(jobs == 2)
+    assert(staged.report.outcomes == Seq(FileOutcome(s"SOL-USDT_PST_$d", 1, 2)))
+  }
+
+  test("a fault in the staged write throws, publishes nothing, and a retry reports exact outcomes") {
+    val root = tmpDir("fault")
+    val d = "2024-03-14"
+    tickerFile(root, d, s"AVA-USDT_PST_$d", (1 to 20).map(tick("AVA-USDT", _, d)))
+    tickerFile(root, d, s"BTC-USDT_PST_$d", (1 to 10).map(tick("BTC-USDT", _, d)) :+ "BTC-USDT,11")
+    // not gzip despite its name: its read task fails inside the write job
+    val broken = tickerFile(root, d, "ETH-USDT_PST_2024-03-14.gz", Seq("not gzip"))
+    val (wh, qd) = (tmpDir("faultwh"), tmpDir("faultq"))
+    def published(dir: String) = new java.io.File(dir).list().filterNot(_.startsWith("_")).toSeq
+    var attempts = 0
+    var afterFault = Seq.empty[String]
+    val ingestFn: (org.apache.spark.sql.SparkSession, Seq[String], String, Option[String]) =>
+        TickerIngest.StagedIngest = (s, paths, w, q) => {
+      attempts += 1
+      if (attempts == 2) afterFault = published(wh) ++ published(qd)
+      TickerIngest.stage(s, if (attempts == 1) paths :+ broken else paths, w, q)
+    }
+    val j = new TickerFileJournal(spark, tmpDir("faultj"))
+    j.appendDiscovered(Seq((s"AVA-USDT_PST_$d", dt(d)), (s"BTC-USDT_PST_$d", dt(d))),
+      ts("2024-03-15 09:00:00"))
+    j.transitionWhere(_ => true, FileStatus.ReadyForProcessing, ts("2024-03-15 09:00:01"))
+    val rep = within(300)(Lifecycle.processReady(spark, j, root, wh, ts("2024-03-15 09:00:02"),
+      Some(qd), RetryPolicy(2, 0L), ingestFn))
+    assert(attempts == 2)
+    assert(afterFault.isEmpty, s"the failed attempt published $afterFault")
+    assert(rep.finished == 2 && rep.errored == 0 && rep.rows == 30 && rep.corruptRows == 1)
+    assert(TickerIngest.warehouse(spark, wh).count() == 30)
+    assert(spark.read.parquet(qd).count() == 1)
+    assert(!new java.io.File(s"$wh/_staging").exists() && !new java.io.File(s"$qd/_staging").exists())
+  }
+
+  test("a batch of empty files stages nothing and does not block on its counts") {
+    val root = tmpDir("empty")
+    val paths = Seq("AVA-USDT", "BTC-USDT").map(t => tickerFile(root, "2024-03-14", s"${t}_PST_2024-03-14", Nil))
+    val staged = within(120)(TickerIngest.stage(spark, paths, tmpDir("emptywh"), Some(tmpDir("emptyq"))))
+    assert(staged.report == graft.ingest.IngestReport(Nil, 0L, 0L))
+  }
+
+  test("writeTasks: one task per T = min(maxPartitionBytes, max(openCost, bytes / cores)) bytes") {
+    val (mb, split, open) = (1L << 20, 128L << 20, 4L << 20)
+    assert(TickerIngest.writeTasks(600000L, split, open, 4) == 1)
+    assert(TickerIngest.writeTasks(35 * mb, split, open, 4) == 4)
+    assert(TickerIngest.writeTasks(35 * mb, split, open, 32) == 9)
+    val huge = 25L << 30
+    val n = TickerIngest.writeTasks(huge, split, open, 4)
+    assert((huge + n - 1) / n <= split && n == 200)
   }
 }

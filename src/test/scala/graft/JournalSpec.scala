@@ -14,8 +14,7 @@ class JournalSpec extends SparkSpec {
   private def freshJournal() = new TickerFileJournal(spark, tmpDir("journal"))
 
   private def candidates(names: (String, String)*) =
-    names.toSeq.toDF("filename", "cd")
-      .select(col("filename"), col("cd").cast("date").as("create_date"))
+    names.toSeq.map { case (f, d) => (f, dt(d)) }
 
   test("B6 dedup: buffer {A,B,C} vs journal {C,X} inserts only {A,B}") {
     val j = freshJournal()
@@ -126,9 +125,7 @@ class JournalSpec extends SparkSpec {
     // one DISCOVERED batch of 5k files + 3 transition batches = 4 appends,
     // 12.5k events
     val names = (1 to 5000).map(i => f"tick$i%05d")
-    j.appendDiscovered(
-      names.toDF("filename").withColumn("create_date", lit("2024-08-06").cast("date")),
-      ts("2024-08-08 10:00:00"))
+    j.appendDiscovered(names.map((_, dt("2024-08-06"))), ts("2024-08-08 10:00:00"))
     j.transition(names.take(2500), FileStatus.ReadyForProcessing, ts("2024-08-08 10:01:00"))
     j.transition(names.take(2500), FileStatus.InProgress, ts("2024-08-08 10:02:00"))
     j.transition(names.take(2500), FileStatus.Finished, ts("2024-08-08 10:03:00"))
@@ -167,8 +164,9 @@ class JournalSpec extends SparkSpec {
     val cand = spark.range(n).select(
       format_string("t%07d", col("id")).as("filename"),
       date_add(lit("2024-01-01").cast("date"), (col("id") % 365).cast("int")).as("create_date"))
-    assert(j.appendDiscovered(cand, ts("2024-08-08 10:00:00")) == n)
-    assert(j.transitionWhere(lit(true), FileStatus.ReadyForProcessing,
+    assert(j.appendDiscovered(cand.as[(String, java.sql.Date)].collect().toSeq,
+      ts("2024-08-08 10:00:00")) == n)
+    assert(j.transitionWhere(_ => true, FileStatus.ReadyForProcessing,
       ts("2024-08-08 10:01:00")) == n)
     // bounded claim: exactly the 1000 OLDEST (create_date, filename) — only
     // 1000 rows ever reach the driver, regardless of journal size
@@ -254,10 +252,7 @@ class JournalSpec extends SparkSpec {
     // the compacted log holds exactly one event per file.
     val j = new TickerFileJournal(spark, tmpDir("journal-conc"))
     val files = (0 until 100).map(i => f"c$i%03d")
-    j.appendDiscovered(
-      files.map((_, "2024-01-01")).toDF("filename", "cd")
-        .select(col("filename"), col("cd").cast("date").as("create_date")),
-      ts("2024-08-08 09:00:00"))
+    j.appendDiscovered(files.map((_, dt("2024-01-01"))), ts("2024-08-08 09:00:00"))
     val start = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(5)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()

@@ -21,9 +21,7 @@ class LifecycleSpec extends SparkSpec {
 
   private def journalWith(rows: (String, String, FileStatus)*): TickerFileJournal = {
     val j = new TickerFileJournal(spark, tmpDir("journal"))
-    val cands = rows.map { case (f, d, _) => (f, d) }
-      .toDF("filename", "cd")
-      .select(col("filename"), col("cd").cast("date").as("create_date"))
+    val cands = rows.map { case (f, d, _) => (f, dt(d)) }
     j.appendDiscovered(cands, ts("2024-08-08 09:00:00"))
     // walk each file to its target status along legal edges
     rows.foreach { case (f, _, target) =>
