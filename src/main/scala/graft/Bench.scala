@@ -74,9 +74,7 @@ object Bench {
   def adjudicationFields(refusal: Option[String],
       committedJson: Option[String]): String =
     refusal.map { why =>
-      // same control/quote scrub as the failed-query map: one raw quote
-      // would corrupt the whole line the driver parses
-      val safe = why.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
+      val safe = scrub(why).take(200)
       // Locale.ROOT: a comma-decimal default locale would emit "220,72"
       // and corrupt the JSON numbers (see fmt2)
       def n(v: Double, digits: Int) = String.format(java.util.Locale.ROOT,
@@ -242,6 +240,43 @@ object Bench {
       if (entries.isEmpty) "" else s""","cqueries":{${entries.mkString(",")}}"""
     }.getOrElse("")
 
+  /** `s` with quotes, backslashes and EVERY control char blanked: one raw
+    * quote, `\b` or ANSI escape in a Spark message would corrupt the JSON
+    * artifact.
+    */
+  private def scrub(s: String): String = s.replaceAll("[\"\\\\\\p{Cntrl}]", " ")
+
+  private def committedFile(path: String): Option[String] =
+    try Some(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)), "UTF-8"))
+    catch { case _: Throwable => None }
+
+  /** Writes [[tracePath]]`(cpus)`: the `stamp` fields, then one entry per
+    * query in `names` (its successful runs, their construction ms, and the
+    * [[graft.tools.SpanCounters]] of all its timed runs) and one for the
+    * `unattributed` jobs (warm-ups, canaries). Read after the last timed
+    * run. Written whatever the board's verdict, but never over a trace of
+    * another core count or of none (the board's rule, [[commitTarget]]).
+    */
+  private def writeTrace(trace: graft.tools.QueryTrace, cpus: Int, stamp: String,
+      names: Seq[String], builds: Map[String, (Int, Long)]): Unit = {
+    val spans = trace.report().toMap
+    def fields(k: String) = spans.getOrElse(k, graft.tools.SpanCounters()).jsonFields
+    val un = graft.tools.QueryTrace.Unattributed
+    val entries = names.map { k =>
+      val (runs, buildMs) = builds.getOrElse(k, (0, 0L))
+      s"\"$k\":{\"runs\":$runs,\"build_ms\":$buildMs,${fields(k)}}"
+    } :+ s"\"$un\":{${fields(un)}}"
+    val path = tracePath(cpus)
+    commitTarget(cpus, committedFile(path), force = false, tracePath)(None) match {
+      case Right(_) =>
+        try java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+          entries.mkString(s"{$stamp,\"spans\":{", ",", "}}\n"))
+        catch { case t: Throwable => System.err.println(s"[bench] trace not written: $t") }
+      case Left(why) => System.err.println(s"[bench] trace not written: $why")
+    }
+  }
+
   private def fmt2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
   /** The stdout line: `head`, the shown count, `mid`, the slowest-first
@@ -320,9 +355,17 @@ object Bench {
   def boardCpus(json: String): Option[Int] =
     """"cpus"\s*:\s*(\d+)""".r.findFirstMatchIn(json).flatMap(_.group(1).toIntOption)
 
+  /** The per-query trace file a run at `cpus` cores writes beside its
+    * board: `BENCH_TRACE.json` at [[RecordCpus]], `BENCH_TRACE_c<N>.json`
+    * at any other count.
+    */
+  def tracePath(cpus: Int): String =
+    if (cpus == RecordCpus) "BENCH_TRACE.json" else s"BENCH_TRACE_c$cpus.json"
+
   /** The commit arm's decision for a full-board run at `cpus` cores:
-    * Right(the board file to write) or Left(why not). `committed` is the
-    * board already at [[boardPath]]`(cpus)`, if any. A committed board
+    * Right(the file to write, [[boardPath]] unless `file` names another
+    * per-core-count artifact) or Left(why not). `committed` is the
+    * artifact already at `file(cpus)`, if any. A committed board
     * whose `cpus` stamp differs from the run's, or that carries no stamp,
     * is refused first — its core count is unknown or different, so
     * replacing it would lose a board of another core count (an unstamped
@@ -331,9 +374,9 @@ object Bench {
     * agree; `force` (SPARK_GRAFT_FORCE_BENCH=1) overrides every refusal.
     * Pure — spec-tested in BoardRecordSpec.
     */
-  def commitTarget(cpus: Int, committed: Option[String], force: Boolean)(
-      verdicts: => Option[String]): Either[String, String] = {
-    val path = boardPath(cpus)
+  def commitTarget(cpus: Int, committed: Option[String], force: Boolean,
+      file: Int => String = boardPath)(verdicts: => Option[String]): Either[String, String] = {
+    val path = file(cpus)
     committed.flatMap { json =>
       boardCpus(json) match {
         case Some(c) if c == cpus => None
@@ -388,6 +431,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.catalyst.GraftExtensions.register(spark)
+    // per-query Spark counters for the trace file (see writeTrace); jobs
+    // run outside a query's timed span count as unattributed
+    val trace = graft.tools.QueryTrace.install(spark.sparkContext)
     // Warm the session (codegen compiler, shuffle machinery, broadcast infra)
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
@@ -459,16 +505,24 @@ object Bench {
     // error and is OMITTED from `queries`, so consumers that sum/min/average
     // the timing map never ingest a sentinel.
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // per query: (successful runs, their summed DataFrame-construction ms)
+    val builds = scala.collection.mutable.Map.empty[String, (Int, Long)]
     val results = selected
       .zipWithIndex.flatMap { case ((name, fn), i) =>
         var lastErr: Throwable = null
-        val ok = (1 to repeat).flatMap { _ =>
+        var buildNs = 0L
+        val ok = trace.span(name) { (1 to repeat).flatMap { _ =>
           val t0 = System.nanoTime()
           try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
+            val df = fn(spark, sfDir)
+            val t1 = System.nanoTime()
+            df.write.format("noop").mode("overwrite").save()
+            val t2 = System.nanoTime()
+            buildNs += t1 - t0
+            Some((t2 - t0) / 1e9)
           } catch { case t: Throwable => lastErr = t; None }
-        }.sorted
+        } }.sorted
+        builds(name) = (ok.size, buildNs / 1000000)
         // Deterministic storage hygiene BETWEEN queries (after this query's
         // repeats, before the next query's first timed run): every run builds
         // its frames (and localCheckpoints) afresh, so blocks pinned by a
@@ -494,10 +548,8 @@ object Bench {
         if ((i + 1) % 64 == 0) System.gc()
         if (ok.isEmpty) {
           failed(name) = Option(lastErr).map(t =>
-            // strip quote/backslash and EVERY control char — one raw \b or
-            // ANSI escape in a Spark message would corrupt the JSON artifact
-            (t.getClass.getSimpleName + ": " + Option(t.getMessage).getOrElse(""))
-              .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(160)).getOrElse("unknown")
+            scrub(t.getClass.getSimpleName + ": " + Option(t.getMessage).getOrElse(""))
+              .take(160)).getOrElse("unknown")
           None
         // carry (median, min): the median rejects one-off spikes, but under
         // SUSTAINED external load on the bench box all three repeats inflate
@@ -523,10 +575,7 @@ object Bench {
     // refused run's self-adjudication fields quote it — but only when its
     // cpus stamp matches the run's (`sameCore`): figures taken at another
     // core count say nothing about this run.
-    val committedJson =
-      try Some(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(boardFile)), "UTF-8"))
-      catch { case _: Throwable => None }
+    val committedJson = committedFile(boardFile)
     val sameCore = committedJson.filter(boardCpus(_).contains(cores))
     // a SPARK_GRAFT_ONLY iteration run must not clobber the committed
     // full-board artifact with a partial map — and neither may a run the
@@ -545,6 +594,10 @@ object Bench {
           driftVerdict(results, sameCore.flatMap(committedBoard)) else None)
     }
     val refusal = target.left.toOption
+    if (only.isEmpty) writeTrace(trace, cores,
+      s""""cpus":$cores,"canary_start_s":$canaryStart,"canary_end_s":$canaryEnd,""" +
+        s""""verdict":"${refusal.map(scrub).getOrElse("committed")}","repeat":$repeat,"sf":"$sfDir"""",
+      selected.map(_._1), builds.toMap)
     refusal.foreach(why => System.err.println(
       s"[bench] REFUSING to overwrite $boardFile: $why " +
         s"(bound $canaryBound for SPARK_GRAFT_CPUS=$cpus; " +

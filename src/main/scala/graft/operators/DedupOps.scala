@@ -415,15 +415,9 @@ object DedupOps {
     // built sequentially those jobs serialize with the box mostly idle
     // (the legs are independent by construction — that is the point of
     // the eval). Same pattern as the curation funnel's component overlap.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val truthF = Future(prefixFilterPairs(s, d)
-      .select(col("a_id"), col("b_id"), lit(1).as("t")))
-    val candF = Future(minhashLshPairs(s, d)
-      .select(col("a_id"), col("b_id"), lit(1).as("c")))
-    val truth = Await.result(truthF, Duration.Inf)
-    val cand = Await.result(candF, Duration.Inf)
+    val (truth, cand) = graft.Overlap.both(s)(
+      prefixFilterPairs(s, d).select(col("a_id"), col("b_id"), lit(1).as("t")),
+      minhashLshPairs(s, d).select(col("a_id"), col("b_id"), lit(1).as("c")))
     truth.join(cand, Seq("a_id", "b_id"), "full_outer")
       .agg(
         sum(when(col("t").isNotNull, 1L).otherwise(0L)).as("n_truth"),

@@ -54,7 +54,11 @@ object Lifecycle {
     * knobs from `application.origin.yaml:15,38-39` via [[RetryPolicy]]): a
     * failed attempt leaves an invisible `_staging` dir behind, never
     * half-appended warehouse rows, so the automatic in-cycle retry is
-    * exactly-once. The commit (renames only) runs OUTSIDE the retry. Only
+    * exactly-once. The commit (renames only) runs OUTSIDE the retry. A
+    * crash after [[TickerIngest.commit]] starts renaming and before the
+    * FINISHED transition is NOT exactly-once: the renamed part files are
+    * already visible, the files stay IN_PROGRESS, and the re-ingest after
+    * [[recoverOrphaned]] appends their rows a second time. Only
     * when every attempt (or the commit) fails does the whole claimed set go
     * ERROR (the reference's partition-wide quarantine,
     * `TickersDataLoader.java:160-169`) and stay re-ingestable
@@ -124,11 +128,14 @@ object Lifecycle {
     * exactly what stops any other cycle from touching them. Route the
     * orphans back along legal edges (IN_PROGRESS → ERROR →
     * READY_FOR_PROCESSING; both appended under the same timestamp, the
-    * journal's batch_seq tie-break keeps them ordered). Data safety needs
-    * no filesystem action here: a crash before [[TickerIngest.commit]]
-    * left only underscore-prefixed staging dirs — invisible to every
-    * reader and swept by the next successful commit — so the re-ingest
-    * after recovery is still exactly-once.
+    * journal's batch_seq tie-break keeps them ordered). No filesystem
+    * action is taken here. A crash before [[TickerIngest.commit]] left only
+    * underscore-prefixed staging dirs — invisible to every reader and swept
+    * by the next successful commit — so that re-ingest is exactly-once. A
+    * crash after the commit started renaming and before the FINISHED
+    * transition left some or all of the batch's part files visible in the
+    * warehouse, and the re-ingest duplicates those rows: the rename walk
+    * publishes no record of what it renamed for recovery to consult.
     */
   def recoverOrphaned(journal: TickerFileJournal, now: Timestamp): Long = {
     val orphaned = journal.filesWith(FileStatus.InProgress)

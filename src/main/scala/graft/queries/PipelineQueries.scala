@@ -1091,13 +1091,9 @@ object PipelineQueries {
     // share no mutable state; Spark's scheduler runs concurrent jobs
     // FIFO and back-fills the tail (actions are only sequential because
     // driver code calls them sequentially).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val contF = Future(contaminationOver(tokDocs))
-    val dselF = Future(dsirSelectOver(tokDocs).filter(col("selected")).select("doc_id"))
-    val cont = Await.result(contF, Duration.Inf)
-    val dsel = Await.result(dselF, Duration.Inf)
+    val (cont, dsel) = graft.Overlap.both(s)(
+      contaminationOver(tokDocs),
+      dsirSelectOver(tokDocs).filter(col("selected")).select("doc_id"))
     // ONE flag pass instead of five stage-count aggregations, and (r19)
     // ONE exchange instead of four doc-id join exchanges: every stage set
     // is a subset of the corpus ids, so a union of TAGGED ids followed by

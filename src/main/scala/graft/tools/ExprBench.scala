@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.catalyst.HashFunctions
@@ -12,22 +12,15 @@ import graft.functions.TextOps
   * (lambda interpreters pay per-element dispatch; `doGenCode` → one
   * compiled loop).
   *
+  * Runs at SPARK_GRAFT_CPUS cores ([[ScaleBench.session]]).
+  *
   * Usage: runMain graft.tools.ExprBench [sfDir] [reps]
   */
 object ExprBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ScaleBench.session()
 
     def bench(tag: String)(df: => DataFrame): Double = {
       df.write.format("noop").mode("overwrite").save() // warm
